@@ -500,6 +500,32 @@ def test_two_phase_kth_multi_k_rank_and_n_cols(spark):
     assert {"rk", "n"} <= set(empty.columns)
 
 
+def test_two_phase_kth_multi_k_accepts_any_iterable(spark):
+    """Multi-k takes any non-string iterable of ranks (a generator, a
+    numpy array, or a callable returning one), not only list/tuple/set;
+    each form picks the same rows as the list form."""
+    import numpy as np
+
+    from travel_data_pipeline_spark.operators import windows as W
+
+    rows = [(i, float((i * 53) % 97) + ((i * 37) % 11))
+            for i in range(200)]
+    df = spark.createDataFrame(rows, "id long, v double")
+    order = [F.col("v").asc(), F.col("id").asc()]
+    ks = [1, 50, 100, 200]
+
+    def pick(k):
+        got = W.two_phase_kth(df, order, F.col("v"), k, num_buckets=8,
+                              rank_col="rk").collect()
+        return sorted((r["rk"], r["id"]) for r in got)
+
+    want = pick(ks)
+    assert [rk for rk, _ in want] == ks
+    for form in ((k for k in ks), np.array(ks), np.array(ks, dtype=np.int32),
+                 lambda n: (k for k in ks)):
+        assert pick(form) == want, type(form).__name__
+
+
 def test_two_phase_kth_ties_straddle_and_materialize_off(spark):
     """All-equal bucket keys (bounds collapse to one bucket) and
     materialize=False must both stay exact."""

@@ -65,8 +65,11 @@ def main() -> None:
     timings: dict[str, float] = {}
     builds: dict[str, float] = {}
     errors: dict[str, str] = {}
+    missing = [name for name in SUBSET if name not in registry.QUERIES]
+    for name in missing:
+        print(f"bench_scale: {name} is not registered", file=sys.stderr)
     for name in SUBSET:
-        if name not in registry.QUERIES:
+        if name in missing:
             continue
         best = float("inf")
         try:
@@ -84,13 +87,17 @@ def main() -> None:
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"bench_scale: {name} failed: {errors[name]}",
                   file=sys.stderr)
+    # a missing or failed query nulls the totals: a partial sum would
+    # read as a faster subset
+    incomplete = bool(errors or missing)
     payload = {
         "metric": "scale-subset-wall-sec",
-        "value": None if errors else round(sum(timings.values()), 3),
+        "value": None if incomplete else round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "build_sec": builds,
-        "build_total_sec": round(sum(builds.values()), 3),
+        "build_total_sec": (None if incomplete
+                            else round(sum(builds.values()), 3)),
         "sf_dir": sf_dir,
         "cpus": int(cpus),
         "calib_sec": c0,
@@ -98,6 +105,8 @@ def main() -> None:
     }
     if errors:
         payload["errors"] = errors
+    if missing:
+        payload["missing"] = missing
     print(json.dumps(payload))
 
 

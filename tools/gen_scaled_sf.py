@@ -78,7 +78,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(dst, exist_ok=True)
 
-    bases: dict[str, int] = {}
+    bases: dict[tuple[str, str], int] = {}
     for col, (tbl, pk) in KEY_BASE.items():
         if (tbl, pk) not in bases:
             mx = (spark.read.parquet(f"{src}/{tbl}.parquet")

@@ -4,7 +4,7 @@ family the reference lacks but the engine exposes.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -294,7 +294,8 @@ def two_phase_kth(df: DataFrame, order_cols: Sequence[Column | str],
     without a global sort OR a full two-phase rank — the exact
     order-statistic sibling of ``two_phase_ordered`` (r14).
 
-    ``k`` may be an int, a list/tuple of ints (optimization r15: a
+    ``k`` may be an int, any non-string iterable of ints (a list,
+    tuple, set, generator or numpy array; optimization r15: a
     bounded set of order statistics — quartile grids — picked in ONE
     pass instead of one full rank per statistic), or a callable
     ``n_rows -> k`` / ``n_rows -> [k, ...]`` evaluated on the phase-1
@@ -344,8 +345,8 @@ def two_phase_kth(df: DataFrame, order_cols: Sequence[Column | str],
     n_rows = sum(c for _, c in counts)
     if callable(k):
         k = k(n_rows)
-    ks = sorted({int(x) for x in k}) if isinstance(k, (list, tuple, set)) \
-        else [int(k)]
+    multi = isinstance(k, Iterable) and not isinstance(k, (str, bytes))
+    ks = sorted({int(x) for x in k}) if multi else [int(k)]
     # (bucket, local_k, global_k) for every in-range requested rank
     hits: list[tuple[int, int, int]] = []
     for kv in ks:

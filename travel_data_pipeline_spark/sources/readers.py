@@ -14,6 +14,9 @@ ReadSchema must show the pruned set).
 from __future__ import annotations
 
 import os
+import re
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,12 +27,78 @@ from travel_data_pipeline_spark import schemas
 TABLE_NAMES = tuple(schemas.TABLES)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver parquet table with its registered schema.
+# Schemas kept per (path, file identity, parquet settings); LRU-bounded.
+# Process-wide, because load_table's callers pass no state.
+_SCHEMA_CACHE_SIZE = 64
+_schemas: OrderedDict[tuple, T.StructType] = OrderedDict()
+_schemas_lock = threading.Lock()
 
-    Parquet footers carry the authoritative schema; we read without an
-    enforced schema (so the scan keeps parquet statistics + pushdown)
-    but the registry in ``schemas.TABLES`` documents the contract.
+# One ``k -> v`` entry of a Scala map's string form whose key is a
+# spark.sql.parquet.* or spark.sql.legacy.parquet.* setting.
+_PARQUET_CONF = re.compile(
+    r"(spark\.sql\.(?:legacy\.)?parquet\.\S+?) -> (.*?)(?=, \S+ -> |\)$)")
+
+
+def _file_identity(path: str) -> tuple:
+    """(size, mtime_ns) of a file, or the sorted (relative path, size,
+    mtime_ns) listing of a directory table. Raises OSError when ``path``
+    is not on the local file system."""
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return (st.st_size, st.st_mtime_ns)
+    listing = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            fp = os.path.join(root, f)
+            fst = os.stat(fp)
+            listing.append((os.path.relpath(fp, path), fst.st_size,
+                            fst.st_mtime_ns))
+    return tuple(sorted(listing))
+
+
+def _parquet_conf(spark: SparkSession) -> tuple:
+    """The session's explicitly set parquet settings, sorted. One JVM
+    call: ``spark.conf.getAll`` costs a round trip per entry."""
+    text = spark._jsparkSession.conf().getAll().toString()
+    return tuple(sorted(_PARQUET_CONF.findall(text)))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only on the
+    first read of this file under these parquet settings.
+
+    Inference reads a footer in a one-task Spark job on every call; a
+    read with the kept ``StructType`` launches none and plans the same
+    scan (same PushedFilters and ReadSchema)."""
+    try:
+        identity = _file_identity(path)
+    except OSError:  # missing or non-local: let Spark infer (or report)
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), identity, _parquet_conf(spark))
+    with _schemas_lock:
+        schema = _schemas.get(key)
+        if schema is not None:
+            _schemas.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schemas_lock:
+        _schemas[key] = df.schema
+        if len(_schemas) > _SCHEMA_CACHE_SIZE:
+            _schemas.popitem(last=False)
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one parquet table (``<sf_dir>/<name>.parquet``).
+
+    The schema is Spark's own footer inference, kept after the first
+    read (``_read_parquet``) and reused while the file's path, size and
+    mtime (or, for a directory table, its file listing) and the
+    session's spark.sql.parquet.* / spark.sql.legacy.parquet.* settings
+    stay the same; any change re-infers. ``schemas.TABLES`` documents
+    the contract but is not enforced: its physical types are not
+    verified against the files.
 
     events.ts has shipped as TIMESTAMP(NANOS) and TIMESTAMP(MICROS,
     NTZ) across driver testdata generations, and the session may or
@@ -37,7 +106,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     combination to plain TIMESTAMP here so downstream code sees ONE
     dtype (r02 lesson: unix_micros rejects NTZ).
     """
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -45,13 +45,16 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Streams need the schema up front, but the driver's testdata has
     shipped events.ts as both TIMESTAMP(NANOS) (reads as a nanos long
     under legacy.parquet.nanosAsLong) and TIMESTAMP(MICROS, NTZ)
-    across rounds — so probe the footer with a zero-cost batch-read
-    and normalize to TIMESTAMP, exactly like readers.load_table.
+    across rounds — so probe the footer through the batch reader's
+    schema cache (no Spark job once load_table has read the file) and
+    normalize to TIMESTAMP, exactly like readers.load_table.
     """
     import os
 
+    from travel_data_pipeline_spark.sources.readers import _read_parquet
+
     probe = dict(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet")).dtypes
+        _read_parquet(spark, os.path.join(sf_dir, "events.parquet")).dtypes
     ).get("ts")
     if probe == "bigint":  # TIMESTAMP(NANOS) + nanosAsLong session
         raw = (spark.readStream.format("parquet")
