@@ -37,8 +37,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     Order matters: the driver's correctness harness samples the first
-    50 entries per round, so verification.ordered_names puts
-    not-yet-driver-verified queries first (see that module's docs).
+    50 entries per round, so verification.ordered_names puts the
+    registered PRIORITY_HEAD seats first, then every other query in
+    registry order (see that module's docs).
     """
     from travel_data_pipeline_spark.verification import ordered_names
 

@@ -840,15 +840,10 @@ def test_lru_cache_hit_audit_matches_python(spark, sf_smoke):
         assert row.hit_rate < 1.0
 
 
-def test_hits_persist_mode_bit_equals_checkpoint_mode(spark, sf_smoke):
-    """Optimization r14: hits_from_edges grew a ``materialize`` knob
-    (the persist variant was A/B'd and measured NEGATIVE — the
-    iterative self-join's relation dedup defeats cache matching — so
-    eager checkpoint stays the default). The two modes are
-    materialization-only variants of the SAME dataflow, so their
-    outputs must be bit-identical — and iter_seconds must keep
-    receiving one wall per iteration in the (forced) checkpoint
-    mode."""
+def test_hits_iter_seconds_walls_and_bit_equal_output(spark, sf_smoke):
+    """hits_from_edges' ``iter_seconds`` list receives exactly one
+    positive wall per iteration, and timing the iterations leaves the
+    output bit-identical to an untimed run."""
     from pyspark.sql import functions as F
 
     from travel_data_pipeline_spark.queries_round15 import (
@@ -862,21 +857,11 @@ def test_hits_persist_mode_bit_equals_checkpoint_mode(spark, sf_smoke):
                         F.col("l_partkey").alias("p"))
              .agg(F.count("*").cast("double").alias("w")))
 
-    got_persist = {(r.role, r.node_id): r.score
-                   for r in hits_from_edges(
-                       spark, edges, materialize="persist").collect()}
+    plain = {(r.role, r.node_id): r.score
+             for r in hits_from_edges(spark, edges).collect()}
     walls: list = []
-    got_ckpt = {(r.role, r.node_id): r.score
-                for r in hits_from_edges(spark, edges,
-                                         iter_seconds=walls).collect()}
+    timed = {(r.role, r.node_id): r.score
+             for r in hits_from_edges(spark, edges,
+                                      iter_seconds=walls).collect()}
     assert len(walls) == _HITS_ITER and all(w > 0 for w in walls)
-    assert got_persist == got_ckpt  # bit-identical, not approx
-    # ADVICE r14 validation: typo'd modes and the conflicting
-    # persist+iter_seconds combination must fail loudly
-    import pytest
-
-    with pytest.raises(ValueError, match="materialize"):
-        hits_from_edges(spark, edges, materialize="cache")
-    with pytest.raises(ValueError, match="iter_seconds"):
-        hits_from_edges(spark, edges, materialize="persist",
-                        iter_seconds=[])
+    assert timed == plain  # bit-identical, not approx

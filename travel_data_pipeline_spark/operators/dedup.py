@@ -285,8 +285,7 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text",
 def simhash_near_pairs(fingerprints: DataFrame, id_col: str = "doc_id",
                        bits: int = 32, bands: int = 4,
                        max_hamming: int = 3,
-                       max_bucket: int = 1000,
-                       materialize: str = "checkpoint") -> DataFrame:
+                       max_bucket: int = 1000) -> DataFrame:
     """Banded near-pair search: split the fingerprint into ``bands``
     chunks; any pair within ``max_hamming`` (< bands) shares at least
     one exact band (pigeonhole). Bucket-local pair generation (no
@@ -296,13 +295,13 @@ def simhash_near_pairs(fingerprints: DataFrame, id_col: str = "doc_id",
     32-bit fingerprint keep random collisions ~1/256 per band — the
     knob that prevents quadratic bucket blowup at scale.
 
-    ``materialize`` pins the capped band relation that both self-join
-    branches consume: ``"checkpoint"`` (default) is an eager
-    localCheckpoint; ``"persist"`` defers to the first action."""
-    if materialize not in ("checkpoint", "persist"):
-        raise ValueError(
-            f"materialize must be 'checkpoint' or 'persist', "
-            f"got {materialize!r}")
+    The capped band relation that both self-join branches consume is
+    pinned with an eager ``localCheckpoint``, as are the engine's other
+    self-join-consumed relations. Those blocks are unreplicated and
+    have no lineage to fall back on, so on a cluster an executor lost
+    after the pin fails the query instead of recomputing it. A
+    reliable pin mode belongs in one shared pin seam (ROADMAP
+    direction 4), not in a per-site option."""
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
     banded = fingerprints.select(
@@ -347,8 +346,7 @@ def simhash_near_pairs(fingerprints: DataFrame, id_col: str = "doc_id",
     # plus the re-derived self-join branch).
     capped = (banded.withColumn("_bsz", F.count("*").over(wb))
               .filter(F.col("_bsz") <= max_bucket).drop("_bsz"))
-    capped = (capped.persist() if materialize == "persist"
-              else capped.localCheckpoint(eager=True))
+    capped = capped.localCheckpoint(eager=True)
     a = capped.select(F.col(id_col).alias("doc_a"),
                       F.col("simhash").alias("sa"),
                       "band_idx", "band_key")

@@ -1061,18 +1061,8 @@ WHERE bit_count(xor(fa.band0, fb.band0))
 
 
 @register("image_ahash_neardup", _ahash_oracle)
-def image_ahash_neardup(spark: SparkSession, sf_dir: str,
-                        materialize: str = "checkpoint") -> DataFrame:
-    """aHash near-dup pairs over the synthesized media table.
-
-    ``materialize`` pins the fingerprint relation consumed by THREE
-    join legs (cand via the banding, fa, fb): ``"checkpoint"``
-    (default) is an eager localCheckpoint, ``"persist"`` the r14
-    experiment — see the site comment for the r15 A/B verdict."""
-    if materialize not in ("checkpoint", "persist"):
-        raise ValueError(
-            f"materialize must be 'checkpoint' or 'persist', "
-            f"got {materialize!r}")
+def image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """aHash near-dup pairs over the synthesized media table."""
     from travel_data_pipeline_spark.operators import dedup
     from travel_data_pipeline_spark.operators.multimodal import (
         ahash_bands,
@@ -1102,8 +1092,7 @@ def image_ahash_neardup(spark: SparkSession, sf_dir: str,
     # ran on a contended box; the r15 idle A/B reversed it — see the
     # A/B table in OPTIMIZATION_r15.md.
     fps = ahash_fingerprints(media)
-    fps = (fps.persist() if materialize == "persist"
-           else fps.localCheckpoint(eager=True))
+    fps = fps.localCheckpoint(eager=True)
     banded = ahash_bands(fps)
     cand = (dedup.bucket_pairs(banded, ["band_idx", "band_val"],
                                F.struct(F.col("media_id").alias("id")),

@@ -2,529 +2,25 @@
 
 The driver's correctness harness verifies the FIRST 50 entries of
 ``__spark_entry__.queries()`` each round (CORRECTNESS_r02.json is
-exactly registry positions 0-49). The registry (200+ queries) has
-outgrown that budget ~4x, so we rotate deliberately: queries with no
-green CORRECTNESS row yet are listed first, in priority order, so
-every round's sample maximizes newly-verified coverage.
-
-``GREEN`` records names with a green row in any prior round's
-CORRECTNESS_r{N}.json; update it each round from the driver output
-(tools/update_green.py). ``PRIORITY_HEAD`` pins the exact head order.
+exactly registry positions 0-49). The registry has outgrown that
+budget ~10x, so the head is chosen deliberately: ``PRIORITY_HEAD``
+pins the exact order of the sampled seats (new queries, re-proof
+seats for changed code, then least-recently-sampled backfill), and
+every other registered name follows in registry order.
 
 Re-proof policy (stated r03, amended r04): every query whose Spark or
 oracle logic changed in a round gets a re-proof seat in the NEXT
-round's head — unless never-green names saturate all 50 slots, in
-which case changed queries are sweep-validated locally
-(tools/sweep_oracles.py at sf0.01 and sf0.1) and overflow to the
-following round's head. Round 4 hit that exception (50 never-green
-names); round 5's head therefore carries both the 32 remaining
-never-green names and the 6 overflowed round-4 re-proofs.
+round's head; overflow beyond the 50 seats is sweep-validated locally
+(tools/sweep_oracles.py at sf0.01 and sf0.1) and carried to the
+following round's head.
 """
 
 from __future__ import annotations
 
-# Green in CORRECTNESS_r01-r12.json (425 names — regenerate with
-# tools/update_green.py).
-GREEN: frozenset[str] = frozenset({
-    "a1_recent_prior_means",
-    "a2_last_value",
-    "a3_pricing_summary",
-    "a5_pivot_wide",
-    "ab_assignment_outcomes",
-    "ab_power_mde",
-    "ab_sprt_curve",
-    "abc_pareto_classes",
-    "acf_daily_counts",
-    "active_day_streaks",
-    "ad_ksample_arms",
-    "adamic_adar_links",
-    "adf_unit_root",
-    "aipw_doubly_robust",
-    "alias_standardize_keywords",
-    "ams_f2_join_size",
-    "anomaly_event_rate",
-    "anomaly_prequential",
-    "ansari_bradley_arms",
-    "anti_join_idle_customers",
-    "approx_distinct_daily_users",
-    "approx_percentile_certified",
-    "array_hof_suite",
-    "asof_last_order",
-    "asof_prev_order_tolerance",
-    "ate_bootstrap_ci",
-    "ate_placebo_refutation",
-    "atkinson_index_revenue",
-    "attribution_last_click",
-    "attribution_multi_touch",
-    "average_precision_rank",
-    "bartlett_arms",
-    "bayes_beta_binomial_arms",
-    "benford_first_digit",
-    "benford_second_digit",
-    "bigram_lm_perplexity",
-    "binseg_double_changepoint",
-    "bitwise_agg_suite",
-    "biweight_midvariance_daily",
-    "bloom_prefilter_join",
-    "bloom_size_planner",
-    "bm25_ndcg_at_k",
-    "bm25_scores",
-    "boilerplate_line_removal",
-    "boolean_agg_suite",
-    "bpe_apply_learned",
-    "bpe_merge_candidates",
-    "bpe_train_merges",
-    "brier_decomposition",
-    "brown_forsythe_arms",
-    "burrows_delta_stylometry",
-    "capture_recapture_users",
-    "ccf_view_purchase",
-    "cdc_chunk_dedup",
-    "cdf_calibration_bins",
-    "char_entropy_flags",
-    "char_trigram_lang_signature",
-    "chi2_event_type_by_dow",
-    "chisq_gof_weekday",
-    "chow_test_daily",
-    "classifier_agreement_kappa",
-    "classifier_auc_rank",
-    "classifier_eval_metrics",
-    "classifier_threshold_sweep",
-    "cliffs_delta_arms",
-    "clustering_depth_audit",
-    "cms_heavy_hitters",
-    "cochran_armitage_trend",
-    "cochran_q_usertypes",
-    "cohort_ltv_curve",
-    "column_profile_stats",
-    "compaction_bin_packing",
-    "conformal_interval_coverage",
-    "consistent_hash_rebalance",
-    "containment_pairs",
-    "contamination_bloom_prefilter",
-    "contamination_ngram_overlap",
-    "contamination_source_matrix",
-    "cooks_distance_daily",
-    "copurchase_bfs_hops",
-    "copurchase_pagerank",
-    "copurchase_triangles",
-    "corpus_vocab_topk",
-    "corr_matrix_lineitem",
-    "cosine_threshold_sweep",
-    "count_min_heavy_hitters",
-    "crosslingual_semantic_pairs",
-    "croston_intermittent_demand",
-    "cube_order_priorities",
-    "cube_revenue_margins",
-    "cuped_variance_reduction",
-    "cusum_changepoint_daily",
-    "cvm_two_sample",
-    "daily_new_returning_users",
-    "data_scaling_ladder",
-    "dataset_card_stats",
-    "dataset_snapshot_diff",
-    "date_edge_suite",
-    "dau_wau_mau",
-    "ddsketch_quantiles",
-    "decile_bins_order_value",
-    "decimal_arithmetic_suite",
-    "decision_stump_gini",
-    "dedup_canonical_by_quality",
-    "dedup_canonical_map",
-    "dedup_cluster_components",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_incremental_lsh",
-    "dedup_minhash_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard_blocked",
-    "dedup_rate_by_source",
-    "dedup_scorecard",
-    "dedup_simhash_fingerprints",
-    "dedup_survivorship_merge",
-    "dedup_token_savings",
-    "degree_assortativity",
-    "did_estimator",
-    "distinct_aggregates",
-    "doc_chunks_overlap",
-    "dp_noisy_event_counts",
-    "dq_constraint_violations",
-    "drift_psi_event_values",
-    "dsir_importance_weights",
-    "dup_pairs_cross_shard",
-    "durbin_watson_daily",
-    "embedding_cosine_topk",
-    "embedding_ivf_topk",
-    "embedding_label_centroids",
-    "embedding_norm_stats",
-    "embedding_outlier_mahalanobis",
-    "embedding_quantize_int8",
-    "embedding_random_projection",
-    "epoch_replication_plan",
-    "eval_scorecard",
-    "event_pattern_match",
-    "event_transition_matrix",
-    "ewma_control_chart_daily",
-    "ewma_values_per_user",
-    "exchange_monthly_map_long",
-    "exchange_pipeline_scores",
-    "exists_subquery_parts",
-    "expected_reciprocal_rank",
-    "f8_dropna_meta_join",
-    "f9_route_filter",
-    "fano_burstiness_by_type",
-    "flight_display_renames",
-    "flight_nested_flatten",
-    "flight_value_agg_variant",
-    "flight_value_w2_j4",
-    "forecast_ensemble_wape",
-    "friedman_dow_weeks",
-    "full_outer_hourly_reconciliation",
-    "funnel_time_to_convert",
-    "funnel_view_click_purchase",
-    "funnel_windowed_stages",
-    "fuzzy_alias_levenshtein",
-    "gap_sequence_patterns",
-    "gapfill_hourly_interpolate",
-    "ge2_inequality_decomposition",
-    "geo_grid_cell_join",
-    "geometric_median_embeddings",
-    "gini_customer_revenue",
-    "good_turing_smoothing",
-    "granger_views_purchases",
-    "group_sequential_boundaries",
-    "grouping_id_bitmask",
-    "grouping_sets_revenue",
-    "grubbs_outlier_daily",
-    "gumbel_weekly_maxima",
-    "hash_split_uniformity_audit",
-    "haversine_nation_pairs",
-    "heaps_law_vocab_growth",
-    "hhi_market_concentration",
-    "hill_tail_index",
-    "histogram_order_values",
-    "hits_supplier_part",
-    "hll_running_distinct_curve",
-    "hll_sliding_window_distinct",
-    "hmm_viterbi_sessions",
-    "hodges_lehmann_daily",
-    "holt_backtest_mape",
-    "holt_linear_daily",
-    "holt_winters_backtest",
-    "holt_winters_daily",
-    "hoover_index_regions",
-    "hurst_rs_exponent",
-    "hybrid_search_rrf",
-    "hyperloglog_union_audit",
-    "image_ahash_neardup",
-    "incremental_recompute_plan",
-    "interval_overlap_join",
-    "interval_union_coverage",
-    "intra_doc_dup_sentences",
-    "intradoc_segment_dedup",
-    "inverted_index_postings",
-    "ipf_raking_weights",
-    "ipw_ate_stratified",
-    "isotonic_calibration_bins",
-    "iv_wald_late",
-    "ivf_quantized_rerank",
-    "ivf_recall_at_k",
-    "j2_dim_fanout",
-    "j3_standardize_defaults",
-    "j5_explode_join",
-    "j6_map_literal",
-    "j9_attractiveness",
-    "james_stein_segment_lifts",
-    "jarque_bera_daily",
-    "join_size_estimation_audit",
-    "jonckheere_terpstra_trend",
-    "jsd_source_topterms",
-    "json_quarantine_split",
-    "k_anonymity_audit",
-    "kaplan_meier_lifetime",
-    "kcore_membership",
-    "kendall_tau_daily",
-    "keyword_coverage_audit",
-    "kmeans_embeddings",
-    "kmv_overlap_audit",
-    "kn_bigram_ppl",
-    "knn_label_noise",
-    "kpss_stationarity",
-    "kruskal_wallis_arms",
-    "ks_logistic_daily",
-    "ks_source_drift",
-    "kuiper_two_sample",
-    "l_diversity_audit",
-    "langid_confusion_matrix",
-    "length_drift_wasserstein",
-    "levene_mean_arms",
-    "lexical_diversity_by_source",
-    "ljung_box_daily",
-    "local_clustering_topnodes",
-    "lognormal_doclen_fit",
-    "logrank_arms",
-    "lorenz_curve_deciles",
-    "lru_cache_hit_audit",
-    "lsh_scurve_audit",
-    "ma7_decomposition_daily",
-    "mad_outliers_events",
-    "mann_kendall_trend",
-    "mann_whitney_arms",
-    "map_hof_suite",
-    "market_basket_lift",
-    "markov_entropy_rate",
-    "markov_removal_attribution",
-    "markov_stationary_distribution",
-    "mase_seasonal_naive",
-    "master_currency_fanout",
-    "master_dim_countries",
-    "matrix_profile_motifs",
-    "max_drawdown_daily",
-    "mcnemar_halfwindow",
-    "median_of_means_value",
-    "median_polish_day_hour",
-    "median_two_pass_orders",
-    "minhash_estimate_error",
-    "mixture_rebalance_plan",
-    "mixture_temperature_plan",
-    "mixture_weights_by_source",
-    "mmr_diversified_topk",
-    "mode_priority_by_status",
-    "mood_median_arms",
-    "mrr_brand_promo",
-    "mtld_lexical_diversity",
-    "multimodal_decode_meta",
-    "multimodal_feature_extract",
-    "multimodal_frame_sample",
-    "multimodal_resize_meta",
-    "mutual_info_event_dow",
-    "neardup_chain_inflation",
-    "neardup_source_matrix",
-    "nearest_error_event",
-    "negative_sample_pairs",
-    "negative_sampling_table",
-    "negbin_length_fit",
-    "nelson_aalen_hazard",
-    "neyman_allocation_plan",
-    "ngram_novelty_curve",
-    "ntile_cume_dist_suite",
-    "nullsafe_join_props",
-    "o2_union_all",
-    "odds_ratio_arms",
-    "order_value_histogram_log",
-    "pacf_durbin_levinson",
-    "pack_token_shards",
-    "padding_waste_audit",
-    "page_hinkley_drift",
-    "page_trend_test",
-    "palma_ratio_revenue",
-    "partial_correlation_daily",
-    "partition_stats_orders",
-    "pca_embeddings_by_label",
-    "percentiles_order_value",
-    "pettitt_changepoint",
-    "pii_density_by_source",
-    "pii_redaction",
-    "pipeline_chunked_shards",
-    "pipeline_data_health",
-    "pipeline_training_data",
-    "pmi_term_pairs",
-    "poisson_bootstrap_ci",
-    "post_stratified_mean",
-    "powerlaw_degree_alpha",
-    "ppjoin_prefix_candidates",
-    "psm_att_matching",
-    "qini_uplift_deciles",
-    "quality_classifier_logistic",
-    "quality_filter_funnel",
-    "quantile_normalize_lengths",
-    "quantile_sketch_merge",
-    "quantile_treatment_effects",
-    "quantization_distortion_bins",
-    "quartile_skew_daily",
-    "rake_keyword_extraction",
-    "randomized_response_debias",
-    "range_join_value_tiers",
-    "rank_biased_overlap",
-    "ratio_metric_delta_ci",
-    "rbp_relevance_curve",
-    "rdd_local_linear",
-    "recency_decay_weights",
-    "record_linkage_blocked",
-    "recursive_nation_hierarchy",
-    "referential_integrity_audit",
-    "regexp_surface_suite",
-    "reservoir_sample_per_lang",
-    "retention_cohorts",
-    "revenue_decile_bands",
-    "revenue_share_within_region",
-    "rfm_customer_segments",
-    "rmst_arms",
-    "rolling_corr_purchase_error",
-    "rolling_retention_matrix",
-    "rollup_revenue",
-    "runs_test_daily",
-    "runs_up_down_daily",
-    "salted_join_orders_customers",
-    "sample_stratified_by_lang",
-    "sampling_design_effect",
-    "sax_daily_motifs",
-    "scaling_law_loglog_fit",
-    "scd2_event_type_history",
-    "seasonal_strength",
-    "seasonality_monthly_index",
-    "semantic_contamination_audit",
-    "semantic_dedup",
-    "semi_join_active_customers",
-    "sentence_explode_outer",
-    "session_gap_sensitivity",
-    "session_top_paths",
-    "session_window_builtin",
-    "sessionize_events",
-    "setop_intersect_except",
-    "setops_halfwindow_pairs",
-    "shapley_channel_attribution",
-    "shard_balance_audit",
-    "shard_writer_manifest",
-    "shingle_rarity_scores",
-    "shuffle_block_mixing",
-    "sign_test_daily",
-    "silhouette_by_cluster",
-    "simhash_near_pairs",
-    "skew_key_salting_plan",
-    "skew_report_partkeys",
-    "skyline_pareto_front",
-    "sla_lag_percentiles",
-    "sliding_hourly_counts",
-    "source_lang_entropy",
-    "source_loo_influence",
-    "source_quality_quartiles",
-    "source_term_log_odds",
-    "spacesaving_topk",
-    "spc_western_electric",
-    "spearman_footrule_nations",
-    "spearman_rank_daily",
-    "split_leakage_check",
-    "split_train_valid_test",
-    "srm_assignment_audit",
-    "stats_aggregates",
-    "stopword_profile_matrix",
-    "stratified_group_split",
-    "stratified_kfold_assign",
-    "string_agg_ordered_suite",
-    "substring_dup_spans",
-    "t2_task_messages",
-    "t_closeness_audit",
-    "table_fingerprints",
-    "tail_dependence_daily",
-    "target_encode_loo_segment",
-    "temporal_tier_join",
-    "text_curation_flags",
-    "text_fingerprints",
-    "text_lang_id",
-    "text_quality_scores",
-    "text_readability_scores",
-    "text_repetition_signals",
-    "text_token_stats",
-    "textrank_keywords",
-    "tfidf_top_terms",
-    "theil_sen_daily_trend",
-    "theil_t_nation_decomposition",
-    "theta_method_forecast",
-    "theta_sketch_setops",
-    "token_entropy_quality",
-    "tokenizer_fertility_by_lang",
-    "topk_movers_parts",
-    "topn_other_nations_revenue",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_stock",
-    "tpch_q12_late_priority_counts",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_revenue",
-    "tpch_q15_top_supplier",
-    "tpch_q16_parts_supplier_cnt",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_filters",
-    "tpch_q20_heavy_part_suppliers",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_dormant_customers",
-    "tpch_q2_min_supplier",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_order_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "trailing_hour_range_window",
-    "trend_slope_by_nation",
-    "trends_ispartial_drop",
-    "trends_pipeline_scores",
-    "trigram_lm_perplexity",
-    "trimmed_mean_ate",
-    "truncation_loss_at_caps",
-    "tukey_q_pairs",
-    "tumbling_hourly",
-    "tvf_explode_suite",
-    "ucb_arm_scores",
-    "unconverted_clicks",
-    "user_lifecycle_states",
-    "vocab_jaccard_source_matrix",
-    "vocab_oov_by_source",
-    "w1_rolling_mean",
-    "w2_top3_orders_per_customer",
-    "w3_growth_epsilon",
-    "w4_unpivot",
-    "w_rank_lag_lead",
-    "watermark_lateness_plan",
-    "weighted_reservoir_topk",
-    "weighted_sample_docs",
-    "welch_anova_arms",
-    "welch_t_parity",
-    "wfunc_ignore_nulls_suite",
-    "wilcoxon_signed_rank",
-    "wilson_ci_conversion",
-    "window_distribution_suite",
-    "window_running_frames",
-    "winsorized_mean_by_type",
-    "x19_json_extract",
-    "x7_x8_time_suite",
-    "x_date_suite",
-    "zipf_slope_vocab",
-    "zone_map_skip_audit",
-    "zorder_interleaved_key",
-})
-
-# Round-8 head. r07 sample was 50/50 green (no red rows); cumulative
-# certification 263/301. Seats follow the re-proof policy:
-#   [0..37]  the 38 never-driver-sampled queries (round-9/10 batches,
-#            registry order) — VERDICT r07 ask #1; all 38 are
-#            sweep-validated at sf0.001/0.01/0.1. The round-7
-#            review-pass re-proof targets (holt_backtest_mape,
-#            ipw_ate_stratified, hash_split_uniformity_audit,
-#            image_ahash_neardup, eval_scorecard,
-#            quantization_distortion_bins) are all inside this block.
-#   [38]     theil_sen_daily_trend — changed THIS round (ADVICE r07:
-#            persist the slopes relation), so it re-proves in the same
-#            round's sample.
-#   [39..]   new round-8 queries as they land, then the 3 round-7
-#            churn-overflow seats, then high-churn greens to ~50.
-#
-# ROUND-9 HEAD (rewritten at round-9 start): CORRECTNESS_r08 stamped
-# all 50 sampled rows green (cumulative 312/322). The 10 remaining
-# Round-13 head (rewritten at round-13 start). CORRECTNESS_r12 stamped
-# all 50 sampled rows green; the registry stands at 425/425
-# driver-green cumulatively with zero never-green names, so the
-# 50-row sample is new-query + changed-code re-proof + green
-# backfill. Head is kept at <= 50 reachable seats (standing ADVICE
-# r10 #3 policy). New round-13 queries are inserted at the top as
-# each one lands; the backfill tail is trimmed to keep the head at
-# 50.
 PRIORITY_HEAD: tuple[str, ...] = (
-    # Round-14 head (rebuilt at registry freeze, 483 registered / 468
-    # GREEN): 15 new round-14 queries, then re-proof seats over exactly
-    # the code paths round 14 changed, then green backfill chosen as the
+    # Round-14 head (rebuilt at registry freeze, 483 registered): 15
+    # new round-14 queries, then re-proof seats over exactly the code
+    # paths round 14 changed, then green backfill chosen as the
     # least-recently-sampled greens (absent from the r10-r13 samples).
     #
     # new round-14 queries (queries_round19.py, in module order)
@@ -592,13 +88,9 @@ PRIORITY_HEAD: tuple[str, ...] = (
 
 
 def ordered_names(registered: list[str]) -> list[str]:
-    """Driver-facing order: PRIORITY_HEAD first, then remaining
-    never-green names in registry order, then the green backlog."""
+    """Driver-facing order: the registered ``PRIORITY_HEAD`` members,
+    then every other name in registry order."""
     reg = set(registered)
     head = [n for n in PRIORITY_HEAD if n in reg]
     head_set = set(head)
-    rest_unverified = [n for n in registered
-                       if n not in head_set and n not in GREEN]
-    rest_green = [n for n in registered
-                  if n not in head_set and n in GREEN]
-    return head + rest_unverified + rest_green
+    return head + [n for n in registered if n not in head_set]
