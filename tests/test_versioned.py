@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import glob
 import os
+from decimal import Decimal
 
 import pytest
 
@@ -158,6 +159,55 @@ def test_merge_schema_evolution(spark, seeded):
     assert "extra" not in V.read_table(spark, seeded).columns
 
 
+ROLLUP_COLS = ["day", "hour_bucket", "event_type", "n", "total_value"]
+EVENTS = "event_id long, ts timestamp, event_type string, value double"
+
+
+def _empty_rollup(spark, path):
+    V.write_table(spark.createDataFrame(
+        [], "day string, hour_bucket string, event_type string, "
+            "n long, total_value decimal(18,2)"), path, partition_col="day")
+
+
+def _recompute(ev):
+    from pyspark.sql import functions as F
+
+    hour = F.date_trunc("hour", "ts")
+    return (ev.groupBy(
+                F.date_format(hour, "yyyy-MM-dd").alias("day"),
+                F.date_format(hour, "yyyy-MM-dd HH:00").alias("hour_bucket"),
+                "event_type")
+            .agg(F.count("*").alias("n"),
+                 F.sum(F.col("value").cast("decimal(18,2)"))
+                  .alias("total_value")))
+
+
+def _assert_same_rollup(got, want):
+    """Exact multiset equality, ``day`` compared as a string (partition
+    inference reads it back as DATE)."""
+    from pyspark.sql import functions as F
+
+    got, want = (df.withColumn("day", F.col("day").cast("string"))
+                 .select(*ROLLUP_COLS) for df in (got, want))
+    assert got.exceptAll(want).count() == 0, "rows missing from want"
+    assert want.exceptAll(got).count() == 0, "rows missing from got"
+
+
+def test_assert_same_rollup_catches_duplicate_and_drop(spark):
+    """A union-distinct row count passes a result that duplicates one
+    grain and drops another; the multiset check must not."""
+    schema = ("day string, hour_bucket string, event_type string, "
+              "n long, total_value decimal(18,2)")
+    a = ("2024-01-01", "2024-01-01 10:00", "view", 1, Decimal("2.00"))
+    b = ("2024-01-01", "2024-01-01 11:00", "view", 1, Decimal("3.00"))
+    want = spark.createDataFrame([a, b], schema)
+    bad = spark.createDataFrame([a, a], schema)
+    assert bad.unionByName(want).distinct().count() == want.count()
+    with pytest.raises(AssertionError):
+        _assert_same_rollup(bad, want)
+    _assert_same_rollup(want, want)
+
+
 def test_incremental_rollup_equals_recompute(spark, sf_smoke, tmp_path):
     """Two incremental maintenance batches over a time-split event
     stream must produce exactly the rollup a full recompute gives —
@@ -165,11 +215,6 @@ def test_incremental_rollup_equals_recompute(spark, sf_smoke, tmp_path):
     from pyspark.sql import functions as F
 
     from travel_data_pipeline_spark.sources.readers import load_table
-    from travel_data_pipeline_spark.sources.versioned import (
-        maintain_hourly_rollup,
-        read_table,
-        write_table,
-    )
 
     ev = load_table(spark, sf_smoke, "events")
     cut = ev.agg(F.percentile(F.unix_micros("ts"), F.lit(0.5))
@@ -179,24 +224,60 @@ def test_incremental_rollup_equals_recompute(spark, sf_smoke, tmp_path):
     assert first.count() > 0 and second.count() > 0
 
     path = str(tmp_path / "rollup")
-    empty = spark.createDataFrame(
-        [], "day string, hour_bucket string, event_type string, "
-            "n long, total_value decimal(18,2)")
-    write_table(empty, path, partition_col="day")
-    maintain_hourly_rollup(first, path)
-    maintain_hourly_rollup(second, path)
+    _empty_rollup(spark, path)
+    V.maintain_hourly_rollup(first, path)
+    V.maintain_hourly_rollup(second, path)
+    _assert_same_rollup(V.read_table(spark, path), _recompute(ev))
 
-    got = read_table(spark, path)
-    hour = F.date_trunc("hour", "ts")
-    want = (ev.groupBy(
-                F.date_format(hour, "yyyy-MM-dd").alias("day"),
-                F.date_format(hour, "yyyy-MM-dd HH:00").alias("hour_bucket"),
-                "event_type")
-            .agg(F.count("*").alias("n"),
-                 F.sum(F.col("value").cast("decimal(18,2)"))
-                  .alias("total_value")))
-    assert got.count() == want.count()
-    diff = (got.join(want, ["day", "hour_bucket", "event_type", "n",
-                            "total_value"], "full_outer")
-            .filter(F.col("n").isNull() | F.col("total_value").isNull()))
-    assert got.unionByName(want).distinct().count() == want.count()
+
+def test_rollup_null_ts_grain_folds_across_batches(spark, tmp_path):
+    """NULL-ts events give a NULL day; a second batch must fold into
+    the existing (NULL, NULL, type) grain, not add a second row."""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 1, 10, 15)
+    b1 = spark.createDataFrame([(1, None, "view", 2.0), (2, t, "view", 1.0)],
+                               EVENTS)
+    b2 = spark.createDataFrame(
+        [(3, None, "view", 4.0), (4, t, "view", 3.0),
+         (5, dt.datetime(2024, 1, 2, 1, 0), "click", 5.0)], EVENTS)
+    path = str(tmp_path / "rollup")
+    _empty_rollup(spark, path)
+    V.maintain_hourly_rollup(b1, path)
+    V.maintain_hourly_rollup(b2, path)
+    got = V.read_table(spark, path)
+    _assert_same_rollup(got, _recompute(b1.unionByName(b2)))
+    nulls = [(r.n, str(r.total_value)) for r in
+             got.filter("day IS NULL").collect()]
+    assert nulls == [(2, "6.00")]
+
+
+def test_rollup_replayed_epoch_is_skipped(spark, tmp_path):
+    """At-least-once redelivery: the same (app id, epoch) folds once."""
+    import datetime as dt
+
+    batch = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1, 10, 15), "view", 2.0)], EVENTS)
+    path = str(tmp_path / "rollup")
+    _empty_rollup(spark, path)
+    assert V.maintain_hourly_rollup(batch, path, txn=("app", 0)) == 2
+    before = _rows(V.read_table(spark, path))
+    assert V.maintain_hourly_rollup(batch, path, txn=("app", 0)) == 2
+    assert V.current_version(path) == 2
+    assert _rows(V.read_table(spark, path)) == before
+    # the next epoch, and the same epoch of another app, still fold
+    assert V.maintain_hourly_rollup(batch, path, txn=("app", 1)) == 3
+    assert V.maintain_hourly_rollup(batch, path, txn=("other", 0)) == 4
+    assert V._read_manifest(path, 4)["txn"] == {"app": 1, "other": 0}
+    assert [(r.n, str(r.total_value)) for r in
+            V.read_table(spark, path).collect()] == [(3, "6.00")]
+
+
+def test_rollup_empty_batch_commits_nothing(spark, tmp_path):
+    path = str(tmp_path / "rollup")
+    _empty_rollup(spark, path)
+    assert V.maintain_hourly_rollup(spark.createDataFrame([], EVENTS),
+                                    path, txn=("app", 0)) == 1
+    assert V.current_version(path) == 1
+    assert V.history(path) == [
+        {"version": 1, "op": "create", "touched": []}]

@@ -10,11 +10,17 @@ parquet + a JSON manifest — and becomes a thin shim the day
   manifest for the new version lands second, and a tiny ``_latest``
   pointer is swapped last via an atomic rename. A crash at any point
   leaves readers on the previous version (orphan files are invisible).
-- **MERGE INTO**: copy-on-write at PARTITION granularity — only
-  partitions present in the source batch are rewritten; untouched
-  partitions are carried forward by manifest reference. This is what
-  keeps a streaming upsert sink O(touched-partitions) per micro-batch
-  instead of O(table) (the round-1 advisor's scale concern).
+- **Partition replace**: a merge commit is copy-on-write at PARTITION
+  granularity — the touched partitions are read by path from the
+  manifest, rewritten as the new version, and the untouched ones
+  carried forward by manifest reference, so a streaming sink costs
+  O(touched partitions) per micro-batch, not O(table). ``merge_into``
+  (Delta ``MERGE INTO``: key match, update, insert, delete) and
+  ``maintain_hourly_rollup`` (a sum fold, one pass per batch) both
+  commit this way through one write+commit helper.
+- **Idempotent writes**: a commit may carry a ``(app id, epoch)`` pair,
+  Delta's ``txnAppId``/``txnVersion``; the manifest keeps the last
+  epoch per app id, and a writer skips an epoch already committed.
 - **Time travel**: every version's manifest is retained;
   ``read_table(..., version=N)`` reads the table as of N.
 
@@ -22,7 +28,8 @@ Layout::
 
     table/
       _latest                # text: current version (atomic swap)
-      _manifests/v00003.json # {"version","op","partitions":{pval:ver}}
+      _manifests/v00003.json # {"version","op","partitions":{pval:ver},
+                             #  "txn":{app_id:epoch}}
       data/tdpv=3/<part=...> # snapshot data, hive-partitioned
 
 Scale notes: the manifest maps partition-value -> version, so its size
@@ -130,6 +137,53 @@ def write_table(df: DataFrame, path: str,
     })
 
 
+def _partition_dirs(path: str, man: dict,
+                    pvals: list[str] | None = None) -> list[str]:
+    """Snapshot dirs of partitions ``pvals`` (default: all) in the
+    version that manifest ``man`` describes. A NULL partition value is
+    spelled ``_NULL_PART``, as the manifest records it."""
+    pcol, base = man["partition_col"], _data_dir(path)
+    parts = man["partitions"]
+    pvals = list(parts) if pvals is None else pvals
+    if pcol is None:
+        return sorted({os.path.join(base, f"{VERSION_DIR_COL}={parts[p]}")
+                       for p in pvals})
+    return sorted(os.path.join(base, f"{VERSION_DIR_COL}={parts[p]}",
+                               f"{pcol}={p}") for p in pvals)
+
+
+def _read_partitions(spark: SparkSession, path: str, man: dict,
+                     pvals: list[str]) -> DataFrame:
+    """The current rows of partitions ``pvals``, read by path."""
+    return (spark.read.option("basePath", _data_dir(path))
+            .parquet(*_partition_dirs(path, man, pvals))
+            .drop(VERSION_DIR_COL))
+
+
+def _replace_partitions(df: DataFrame, path: str, man: dict,
+                        touched: list[str],
+                        txn: tuple[str, int] | None = None) -> int:
+    """Write ``df`` as the next version of partitions ``touched`` and
+    commit it as a ``merge``. ``df`` holds every row those partitions
+    keep: a touched partition it no longer fills leaves the manifest,
+    and untouched partitions carry forward by reference. ``txn`` is an
+    ``(app id, epoch)`` pair recorded for idempotent replays."""
+    version, pcol = man["version"] + 1, man["partition_col"]
+    written = _write_snapshot(df, path, version, pcol)
+    partitions = dict(man["partitions"])
+    for p in touched:
+        partitions.pop(p, None)
+    for p in written:
+        partitions[p] = version
+    txns = dict(man.get("txn", {}))
+    if txn is not None:
+        txns[txn[0]] = txn[1]
+    return _commit(path, {
+        "version": version, "op": "merge", "partition_col": pcol,
+        "partitions": partitions, "txn": txns,
+    })
+
+
 def read_table(spark: SparkSession, path: str,
                version: int | None = None) -> DataFrame:
     """The table as of ``version`` (default: latest). Partition dirs
@@ -139,18 +193,10 @@ def read_table(spark: SparkSession, path: str,
     if v < 1:
         raise FileNotFoundError(f"no committed version at {path}")
     man = _read_manifest(path, v)
-    pcol, base = man["partition_col"], _data_dir(path)
-    if pcol is None:
-        dirs = sorted({os.path.join(base, f"{VERSION_DIR_COL}={sv}")
-                       for sv in man["partitions"].values()})
-    else:
-        dirs = sorted(
-            os.path.join(base, f"{VERSION_DIR_COL}={sv}", f"{pcol}={pval}")
-            for pval, sv in man["partitions"].items())
     # mergeSchema: snapshots written before an additive schema change
     # surface the new columns as NULL
-    return (spark.read.option("basePath", base)
-            .option("mergeSchema", "true").parquet(*dirs)
+    return (spark.read.option("basePath", _data_dir(path))
+            .option("mergeSchema", "true").parquet(*_partition_dirs(path, man))
             .drop(VERSION_DIR_COL))
 
 
@@ -172,19 +218,15 @@ def merge_into(source: DataFrame, path: str, keys: list[str],
     mergeSchema); by default unknown columns are dropped, matching
     Delta's strict-schema default.
     """
-    spark = source.sparkSession
     base_version = current_version(path)
     if base_version < 1:
         raise FileNotFoundError(
             f"merge_into target {path} does not exist; write_table first")
     man = _read_manifest(path, base_version)
     pcol = man["partition_col"]
-    version = base_version + 1
 
     if pcol is None:
         touched = [_NO_PART]
-        current = read_table(spark, path)
-        relevant = source
     else:
         # The manifest is keyed by partition value, so the commit needs
         # the touched set driver-side — the same O(touched-partitions)
@@ -202,36 +244,18 @@ def merge_into(source: DataFrame, path: str, keys: list[str],
         touched = sorted(str(v) for v in row["vals"])
         if row["has_null"]:
             touched.append(_NULL_PART)
-        existing = [p for p in touched if p in man["partitions"]]
-        if existing:
-            dirs = [os.path.join(_data_dir(path),
-                                 f"{VERSION_DIR_COL}={man['partitions'][p]}",
-                                 f"{pcol}={p}")
-                    for p in existing]
-            current = (spark.read.option("basePath", _data_dir(path))
-                       .parquet(*dirs).drop(VERSION_DIR_COL))
-        else:
-            current = source.limit(0)
-        relevant = source
+    existing = [p for p in touched if p in man["partitions"]]
+    current = (_read_partitions(source.sparkSession, path, man, existing)
+               if existing else source.limit(0))
 
-    kept = current.join(relevant.select(*keys).distinct(), keys, "left_anti")
+    kept = current.join(source.select(*keys).distinct(), keys, "left_anti")
     if merge_schema:
-        merged = kept.unionByName(relevant, allowMissingColumns=True)
+        merged = kept.unionByName(source, allowMissingColumns=True)
     else:
-        merged = kept.unionByName(relevant.select(*current.columns))
+        merged = kept.unionByName(source.select(*current.columns))
     if delete_condition:
         merged = merged.filter(f"NOT ({delete_condition})")
-
-    written = _write_snapshot(merged, path, version, pcol)
-    partitions = dict(man["partitions"])
-    for p in touched:       # fully-deleted partitions leave the manifest
-        partitions.pop(p, None)
-    for p in written:
-        partitions[p] = version
-    return _commit(path, {
-        "version": version, "op": "merge", "partition_col": pcol,
-        "partitions": partitions,
-    })
+    return _replace_partitions(merged, path, man, touched)
 
 
 def history(path: str) -> list[dict]:
@@ -245,50 +269,63 @@ def history(path: str) -> list[dict]:
     return out
 
 
-def maintain_hourly_rollup(batch: DataFrame, path: str) -> int:
+def maintain_hourly_rollup(batch: DataFrame, path: str,
+                           txn: tuple[str, int] | None = None) -> int:
     """Incremental continuous-aggregate maintenance (the hypertable /
-    materialized-rollup pattern): aggregate the incoming event batch to
-    (day, hour_bucket, event_type) grain, combine it with the CURRENT
-    rollup rows for exactly those keys, and MERGE the refreshed rows
-    back — matched grains are replaced with updated sums, new grains
-    insert, untouched partitions carry forward by reference
-    (merge_into's copy-on-write).
+    materialized-rollup pattern): fold an event batch into the rollup
+    at (day, hour_bucket, event_type) grain, in one pass per batch.
 
-    Cost per batch is O(grains touched by the batch), not O(table):
-    the combine reads only the affected day partitions (partition-
-    column filter prunes the snapshot scan) and the MERGE rewrites only
-    those partitions. Counts and DECIMAL sums are exact, so
-    incremental == full recompute bit-for-bit (asserted in
-    tests/test_versioned.py).
+    1. Collect the batch's distinct days — one small action over the
+       batch only. An empty batch commits nothing.
+    2. Read exactly those day partitions by path from the manifest
+       (a NULL ``ts`` gives a NULL day, the ``_NULL_PART`` dir).
+    3. Union them with the batch's grain sums and re-aggregate, so each
+       touched day holds every grain it had plus the batch's.
+    4. Write the result as the new version of those partitions and
+       commit; every other day carries forward by reference.
+
+    Cost per batch is O(rows of the touched days), not O(table): no
+    other partition is listed, read or written, and no MERGE key match
+    runs, because the re-aggregated days replace the old ones whole.
+    Counts and DECIMAL sums are exact, so incremental == full recompute
+    bit-for-bit (asserted in tests/test_versioned.py).
+
+    ``txn`` is an ``(app id, epoch)`` pair, Delta's txnAppId/txnVersion:
+    the manifest keeps the last epoch committed per app id, and an epoch
+    at or below it is skipped (returns the current version), so an
+    at-least-once redelivery of a batch is folded once.
 
     First call may target an empty table created via
     ``write_table(empty_rollup, path, partition_col='day')``.
     """
     from pyspark.sql import functions as F
 
+    man = _read_manifest(path, current_version(path))
+    if txn is not None and man.get("txn", {}).get(txn[0], -1) >= txn[1]:
+        return man["version"]
     hour = F.date_trunc("hour", "ts")
+    day = F.date_format(hour, "yyyy-MM-dd").alias("day")
+    days = [r.day for r in batch.select(day).distinct().collect()]
+    if not days:
+        return man["version"]
+    touched = sorted(_NULL_PART if d is None else d for d in days)
     delta = (batch.groupBy(
-                F.date_format(hour, "yyyy-MM-dd").alias("day"),
+                day,
                 F.date_format(hour, "yyyy-MM-dd HH:00").alias("hour_bucket"),
                 "event_type")
              .agg(F.count("*").alias("n"),
                   F.sum(F.col("value").cast("decimal(18,2)"))
                    .alias("total_value")))
-    spark = batch.sparkSession
-    # a freshly-created rollup has a manifest but zero partitions —
-    # there is nothing to read (and no parquet dirs to infer from)
-    man = _read_manifest(path, current_version(path))
-    if man["partitions"]:
-        # affected-day set as a JOIN, not a driver collect: the day
-        # list broadcasts and dynamic partition pruning skips the
-        # untouched day dirs at scan time.
-        current = read_table(spark, path).join(
-            F.broadcast(delta.select("day").distinct()), "day", "semi")
-    else:
-        current = delta.limit(0)
-    combined = (current.unionByName(delta)
-                .groupBy("day", "hour_bucket", "event_type")
+    rows = delta
+    existing = [p for p in touched if p in man["partitions"]]
+    if existing:
+        # partition inference reads `day` back as DATE; the delta and
+        # the dir names spell it yyyy-MM-dd
+        rows = (_read_partitions(batch.sparkSession, path, man, existing)
+                .withColumn("day", F.col("day").cast("string"))
+                .unionByName(delta))
+    combined = (rows.groupBy("day", "hour_bucket", "event_type")
                 .agg(F.sum("n").cast("long").alias("n"),
                      F.sum("total_value").cast("decimal(18,2)")
                       .alias("total_value")))
-    return merge_into(combined, path, keys=["hour_bucket", "event_type"])
+    return _replace_partitions(combined, path, man, touched, txn)

@@ -496,18 +496,24 @@ def rollup_maintenance_stream(events: DataFrame, table_path: str,
                               checkpoint: str):
     """Streaming continuous aggregate: every micro-batch folds into the
     versioned hourly rollup via maintain_hourly_rollup — the streaming
-    producer of the same table the batch path maintains. foreachBatch
-    + the MERGE's copy-on-write gives effectively-once grain updates
-    on at-least-once redelivery (a replayed batch re-derives the same
-    grain values)."""
+    producer of the same table the batch path maintains.
+
+    Each fold commits ``(checkpoint, epoch_id)`` as its transaction id
+    (Delta's txnAppId/txnVersion). A replayed epoch — at-least-once
+    redelivery after a crash between the table commit and the stream's
+    own commit — is skipped, so each batch is folded effectively once.
+    The checkpoint path names the stream because epoch ids restart with
+    a fresh checkpoint."""
+    import os
+
     from travel_data_pipeline_spark.sources.versioned import (
         maintain_hourly_rollup,
     )
 
+    app_id = os.path.abspath(checkpoint)
+
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        maintain_hourly_rollup(batch_df, table_path)
+        maintain_hourly_rollup(batch_df, table_path, txn=(app_id, epoch_id))
 
     return (events.writeStream.foreachBatch(fold)
             .option("checkpointLocation", checkpoint)
